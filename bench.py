@@ -167,7 +167,8 @@ def main() -> None:
             for n in times
             if duck_times.get(n)
         }
-        out["ratio_total"] = round(out["value"] / out["duckdb_value"], 3)
+        if out["duckdb_value"]:
+            out["ratio_total"] = round(out["value"] / out["duckdb_value"], 3)
     print(json.dumps(out))
 
 

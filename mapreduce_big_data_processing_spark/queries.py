@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_big_data_processing_spark import catalog
@@ -76,15 +76,45 @@ def _work_dir(spark: SparkSession, name: str) -> str:
     return base
 
 
-#: Exact integer 1e-4-unit revenue term: price cents x (100 - discount
-#: cents). Both columns are 2-decimal by construction, so this is the
-#: true rational value with NO float protocol — the integer-cents rule:
-#: round(sum(float-product), 2) loses the round-half lottery at scale
-#: (the 10x sweep caught local_supplier_volume at .82 vs .81).
-def _cents4(price: str = "l_extendedprice", disc: str = "l_discount"):
-    return F.round(F.col(price) * 100, 0).cast("bigint") * (
-        F.lit(100) - F.round(F.col(disc) * 100, 0).cast("bigint")
-    )
+def _cents(col: str) -> Column:
+    """Exact integer cents of a 2-decimal money column (the integer-cents
+    rule).
+
+    Every money column of the fixtures (prices, discounts, taxes,
+    balances, event values) is a 2-decimal double, so ``x * 100`` lies
+    within a few ulps of an integer and ``floor(x * 100 + 0.5)`` is that
+    integer: the same bigint as ``round(x * 100, 0)``, but without the
+    per-row ``java.math.BigDecimal`` that Spark's ``round(double)``
+    builds. All money arithmetic then runs on these exact integers —
+    products of cents are exact sub-cent units, sums are exact — and a
+    displayed decimal is derived once per group, rounded half-up at the
+    cent by integer arithmetic (`_half_up_cents`). Both engines therefore
+    round the same exact value: ``round(sum(float), 2)`` is a round-half
+    lottery whose last ulp differs between engines' summation orders, and
+    ``round(units / 10000.0, 2)`` rounds the binary double of a value
+    that may end exactly on a half cent.
+    """
+    return F.floor(F.col(col) * 100 + 0.5)
+
+
+def _cents4(price: str = "l_extendedprice", disc: str = "l_discount") -> Column:
+    """Discounted revenue in exact 1e-4 dollar units: price cents x
+    (100 - discount cents)."""
+    return _cents(price) * (100 - _cents(disc))
+
+
+def _half_up_cents(units: Column, per_cent: int) -> Column:
+    """Aggregate: the sum of non-negative integer ``units`` (``per_cent``
+    units to the cent) as a 2-decimal double, rounded half-up at the cent.
+
+    The sum is split into a quotient sum and a remainder sum so that both
+    bigint partial sums stay far from 2^63 even where the plain sum of the
+    units would not (1e-6-unit charges at 1000x); the half-up division
+    then runs once per group."""
+    per = F.lit(per_cent)
+    whole = F.sum(F.call_function("div", units, per))
+    rest = F.sum(units % per)
+    return (whole + F.call_function("div", rest + per_cent // 2, per)) / 100.0
 
 
 # ===========================================================================
@@ -98,10 +128,10 @@ def _cents4(price: str = "l_extendedprice", disc: str = "l_discount"):
     SELECT l_returnflag, l_linestatus,
            round(sum(l_quantity), 2)                                    AS sum_qty,
            round(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) / 100.0, 2) AS sum_base_price,
-           round(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))) / 10000.0, 2) AS sum_disc_price,
-           round(sum((CAST(round(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(round(l_discount * 100, 0) AS BIGINT)))
+           CAST((sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))) + 50) // 100 AS DOUBLE) / 100.0 AS sum_disc_price,
+           CAST((sum((CAST(round(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(round(l_discount * 100, 0) AS BIGINT)))
                      * (100 + CAST(round(l_tax * 100, 0) AS BIGINT)))
-                 / 1000000.0, 2) AS sum_charge,
+                 + 5000) // 10000 AS DOUBLE) / 100.0 AS sum_charge,
            round(avg(l_quantity), 6)                                    AS avg_qty,
            round(avg(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) / 100.0, 6) AS avg_price,
            round(avg(CAST(round(l_discount * 100, 0) AS BIGINT)) / 100.0, 6) AS avg_disc,
@@ -117,35 +147,21 @@ def pricing_summary(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
-    disc_price_i = _cents4()  # exact 1e-4 units (integer-cents rule)
-    charge_i = disc_price_i.cast("decimal(38,0)") * (
-        F.lit(100) + F.round(F.col("l_tax") * 100, 0).cast("bigint")
-    )  # exact 1e-6 units; decimal: bigint would overflow past ~1000x
+    disc_price_i = _cents4()
+    charge_i = disc_price_i * (100 + _cents("l_tax"))  # exact 1e-6 units
     return R.group_agg(
         li,
         ["l_returnflag", "l_linestatus"],
         [
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            # integer-cents rule for every 2-decimal money column: sums
-            # AND means derive from the exact integer on both engines
-            F.round(
-                F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint"))
-                / 100.0,
-                2,
-            ).alias("sum_base_price"),
-            F.round(F.sum(disc_price_i) / 10000.0, 2).alias("sum_disc_price"),
-            F.round(F.sum(charge_i) / 1000000.0, 2).alias("sum_charge"),
+            F.round(F.sum(_cents("l_extendedprice")) / 100.0, 2).alias(
+                "sum_base_price"
+            ),
+            _half_up_cents(disc_price_i, 100).alias("sum_disc_price"),
+            _half_up_cents(charge_i, 10_000).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(
-                F.avg(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint"))
-                / 100.0,
-                6,
-            ).alias("avg_price"),
-            F.round(
-                F.avg(F.round(F.col("l_discount") * 100, 0).cast("bigint"))
-                / 100.0,
-                6,
-            ).alias("avg_disc"),
+            F.round(F.avg(_cents("l_extendedprice")) / 100.0, 6).alias("avg_price"),
+            F.round(F.avg(_cents("l_discount")) / 100.0, 6).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         ],
     )
@@ -180,13 +196,7 @@ def revenue_by_nation(spark, sf_dir):
         joined,
         ["r_name", "n_name"],
         [
-            # integer-cents rule: sum exact cents, derive the decimal —
-            # round(sum(float),2) loses the round-half lottery at scale
-            F.round(
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-                / 100.0,
-                2,
-            ).alias("revenue"),
+            F.round(F.sum(_cents("o_totalprice")) / 100.0, 2).alias("revenue"),
             F.count(F.lit(1)).alias("n_orders"),
         ],
     )
@@ -197,9 +207,9 @@ def revenue_by_nation(spark, sf_dir):
     """
     SELECT p_brand,
            round(sum(l_quantity), 2) AS sum_qty,
-           round(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-                     * (100 - CAST(round(l_discount * 100, 0) AS BIGINT)))
-                 / 10000.0, 2) AS revenue,
+           CAST((sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
+                          * (100 - CAST(round(l_discount * 100, 0) AS BIGINT)))
+                      + 50) // 100 AS DOUBLE) / 100.0 AS revenue,
            count(*) AS n_lines
     FROM lineitem JOIN part ON l_partkey = p_partkey
     GROUP BY p_brand
@@ -216,7 +226,7 @@ def brand_volume(spark, sf_dir):
         ["p_brand"],
         [
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(_cents4()) / 10000.0, 2).alias("revenue"),
+            _half_up_cents(_cents4(), 100).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         ],
     )
@@ -280,11 +290,7 @@ def top_customers(spark, sf_dir):
         R.equi_join(c, o, c.c_custkey == o.o_custkey),
         ["c_custkey", "c_name"],
         [
-            F.round(
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-                / 100.0,
-                2,
-            ).alias("revenue")
+            F.round(F.sum(_cents("o_totalprice")) / 100.0, 2).alias("revenue")
         ],
     )
     return R.top_k(rev, 10, F.desc("revenue"), F.asc("c_custkey"))
@@ -348,10 +354,8 @@ def nation_market_share(spark, sf_dir):
         .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
         .join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey),
         ["r_name", "n_name"],
-        # exact integer cents: numerator and denominator of the share
-        # are then identical integers on both engines (the ratio cancels
-        # the /100, so no decimal derivation is needed)
-        [F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")).alias("rev")],
+        # the share's ratio cancels the /100: no decimal derivation
+        [F.sum(_cents("o_totalprice")).alias("rev")],
     )
     return R.group_fraction(rev, ["r_name"], "rev", out="share").select(
         "r_name", "n_name", F.round("share", 6).alias("share")
@@ -404,9 +408,7 @@ def status_rollup(spark, sf_dir):
     `ppt/Ch6….pdf p.54-57` extended)."""
     o = _t(spark, sf_dir, "orders")
     return o.rollup("o_orderstatus", "o_orderpriority").agg(
-        F.round(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")) / 100.0, 2
-        ).alias("total"),
+        F.round(F.sum(_cents("o_totalprice")) / 100.0, 2).alias("total"),
         F.count(F.lit(1)).alias("n"),
     )
 
@@ -443,11 +445,7 @@ def orders_per_year_priority(spark, sf_dir):
         ["o_year", "o_orderpriority"],
         [
             F.count(F.lit(1)).alias("n"),
-            F.round(
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-                / 100.0,
-                2,
-            ).alias("total"),
+            F.round(F.sum(_cents("o_totalprice")) / 100.0, 2).alias("total"),
         ],
     )
 
@@ -3186,10 +3184,7 @@ def status_priority_cube(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
-        # integer-cents rule: the mean derives from the exact cents sum
-        F.round(
-            F.avg(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")) / 100.0, 6
-        ).alias("avg_price"),
+        F.round(F.avg(_cents("o_totalprice")) / 100.0, 6).alias("avg_price"),
     )
 
 
@@ -4125,7 +4120,7 @@ def latest_event_per_user(spark, sf_dir):
 @query(
     "shipping_priority",
     """
-    SELECT l_orderkey, round(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))) / 10000.0, 2) AS revenue,
+    SELECT l_orderkey, CAST((sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))) + 50) // 100 AS DOUBLE) / 100.0 AS revenue,
            CAST(o_orderdate AS TIMESTAMP) AS o_orderdate
     FROM customer JOIN orders ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -4152,7 +4147,7 @@ def shipping_priority(spark, sf_dir):
         .join(li, F.col("o_orderkey") == li.l_orderkey)
     )
     rev = joined.groupBy("l_orderkey", "o_orderdate").agg(
-        F.round(F.sum(_cents4()) / 10000.0, 2).alias("revenue")
+        _half_up_cents(_cents4(), 100).alias("revenue")
     )
     return R.top_k(rev, 10, F.desc("revenue"), F.asc("l_orderkey")).select(
         "l_orderkey", "revenue", "o_orderdate"
@@ -4163,9 +4158,9 @@ def shipping_priority(spark, sf_dir):
     "local_supplier_volume",
     """
     SELECT n_name,
-           round(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-                     * (100 - CAST(round(l_discount * 100, 0) AS BIGINT)))
-                 / 10000.0, 2) AS revenue
+           CAST((sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
+                          * (100 - CAST(round(l_discount * 100, 0) AS BIGINT)))
+                      + 50) // 100 AS DOUBLE) / 100.0 AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -4179,13 +4174,9 @@ def shipping_priority(spark, sf_dir):
 def local_supplier_volume(spark, sf_dir):
     """TPC-H Q5 shape: 6-way join with a same-nation theta condition;
     nation/region broadcast, the supplier condition folds into the join.
-    Revenue accumulates as EXACT integer 10^-4 units (price cents x
-    (100 - discount cents); both columns are 2-decimal by construction)
-    and the displayed 2-decimal double derives from that identical
-    integer in both engines — the float sum(price*(1-disc)) protocol
-    lost the round-half lottery at the 10x sweep (one nation's 5e8-scale
-    sum differed in the last ulp across engines: .815 rounding .82 vs
-    .81)."""
+    Revenue is integer-cents money (`_cents`); the float
+    sum(price*(1-disc)) it replaced lost the round-half lottery at the
+    10x sweep (.815 rounding .82 vs .81)."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -4202,20 +4193,17 @@ def local_supplier_volume(spark, sf_dir):
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     )
-    cents4 = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100, 0).cast("bigint")
-    )
     return joined.groupBy("n_name").agg(
-        F.round(F.sum(cents4) / 10000.0, 2).alias("revenue")
+        _half_up_cents(_cents4(), 100).alias("revenue")
     )
 
 
 @query(
     "forecast_revenue_change",
     """
-    SELECT round(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-                     * CAST(round(l_discount * 100, 0) AS BIGINT))
-                 / 10000.0, 2) AS revenue
+    SELECT CAST((sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
+                          * CAST(round(l_discount * 100, 0) AS BIGINT))
+                 + 50) // 100 AS DOUBLE) / 100.0 AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
       AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
@@ -4235,13 +4223,8 @@ def forecast_revenue_change(spark, sf_dir):
         & (F.col("l_quantity") < 24)
     )
     return out.agg(
-        F.round(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
-                * F.round(F.col("l_discount") * 100, 0).cast("bigint")
-            )
-            / 10000.0,
-            2,
+        _half_up_cents(
+            _cents("l_extendedprice") * _cents("l_discount"), 100
         ).alias("revenue")
     )
 
@@ -4409,9 +4392,7 @@ def segment_pivot_revenue(spark, sf_dir):
     return (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .withColumn(
-            "__cents", F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-        )
+        .withColumn("__cents", _cents("o_totalprice"))
         .groupBy("n_name")
         .pivot("c_mktsegment", segs)
         .agg(F.round(F.sum("__cents") / 100.0, 2))
@@ -4457,13 +4438,9 @@ def small_quantity_part_revenue(spark, sf_dir):
         mine.withColumn("qty_thresh", 0.2 * F.avg("l_quantity").over(w))
         .filter(F.col("l_quantity") < F.col("qty_thresh"))
         .agg(
-            # integer-cents rule: exact cents sum, then the two divisions
-            # in oracle-identical order
+            # the two divisions in oracle-identical order
             F.round(
-                F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint"))
-                / 100.0
-                / 7.0,
-                2,
+                F.sum(_cents("l_extendedprice")) / 100.0 / 7.0, 2
             ).alias("avg_yearly")
         )
     )
@@ -4495,11 +4472,7 @@ def daily_revenue_moving_avg(spark, sf_dir):
         F.date_format(F.date_trunc("day", F.col("o_orderdate")), "yyyy-MM-dd").alias(
             "day"
         )
-    ).agg(
-        # integer-cents rule: the day sums AND the 7-day mean derive from
-        # the identical exact integer on both engines
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")).alias("rev_c")
-    )
+    ).agg(F.sum(_cents("o_totalprice")).alias("rev_c"))
     w = Window.orderBy("day").rowsBetween(-6, 0)
     return daily.select(
         "day",
@@ -4614,9 +4587,7 @@ def customer_spend_quartiles(spark, sf_dir):
     over per-customer aggregates, not raw orders."""
     o = _t(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
-        F.round(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")) / 100.0, 2
-        ).alias("spend")
+        F.round(F.sum(_cents("o_totalprice")) / 100.0, 2).alias("spend")
     )
     w = Window.orderBy("spend", "o_custkey")
     q = spend.select("spend", F.ntile(4).over(w).alias("quartile"))
@@ -4818,7 +4789,7 @@ def approx_value_percentiles(spark, sf_dir):
     "nation_trade_flows",
     """
     SELECT supp_nation, cust_nation, l_year,
-           round(sum(volume) / 10000.0, 2) AS revenue
+           CAST((sum(volume) + 50) // 100 AS DOUBLE) / 100.0 AS revenue
     FROM (
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                CAST(year(l_shipdate) AS INTEGER) AS l_year,
@@ -4862,7 +4833,7 @@ def nation_trade_flows(spark, sf_dir):
             "cust_nation",
             F.year("l_shipdate").cast("int").alias("l_year"),
         )
-        .agg(F.round(F.sum(_cents4()) / 10000.0, 2).alias("revenue"))
+        .agg(_half_up_cents(_cents4(), 100).alias("revenue"))
     )
 
 
@@ -5076,7 +5047,7 @@ def large_volume_customers(spark, sf_dir):
 @query(
     "disjunctive_part_revenue",
     """
-    SELECT round(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))) / 10000.0, 2) AS revenue
+    SELECT CAST((sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))) + 50) // 100 AS DOUBLE) / 100.0 AS revenue
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
            AND l_quantity BETWEEN 1 AND 20)
@@ -5112,7 +5083,7 @@ def disjunctive_part_revenue(spark, sf_dir):
     return (
         li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
         .filter(cond)
-        .agg(F.round(F.sum(_cents4()) / 10000.0, 2).alias("revenue"))
+        .agg(_half_up_cents(_cents4(), 100).alias("revenue"))
     )
 
 
@@ -5152,7 +5123,7 @@ def idle_rich_customers(spark, sf_dir):
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
     )
-    cents = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
+    cents = _cents("c_acctbal")
     m = c.filter(F.col("c_acctbal") > 0).agg(
         F.sum(cents).cast("bigint").alias("__s"), F.count(F.lit(1)).alias("__n")
     )
@@ -6746,7 +6717,7 @@ def pq_similarity_topk(spark, sf_dir):
     "top_revenue_supplier",
     """
     WITH rev AS (
-      SELECT l_suppkey, round(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))) / 10000.0, 2)
+      SELECT l_suppkey, CAST((sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT) * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))) + 50) // 100 AS DOUBLE) / 100.0
                AS total_rev
       FROM lineitem
       WHERE l_shipdate >= DATE '1997-01-01' AND l_shipdate < DATE '1997-04-01'
@@ -6772,7 +6743,7 @@ def top_revenue_supplier(spark, sf_dir):
             & (F.col("l_shipdate") < "1997-04-01")
         )
         .groupBy("l_suppkey")
-        .agg(F.round(F.sum(_cents4()) / 10000.0, 2).alias("total_rev"))
+        .agg(_half_up_cents(_cents4(), 100).alias("total_rev"))
     )
     mx = rev.agg(F.max("total_rev").alias("mx"))
     top = rev.join(F.broadcast(mx), rev["total_rev"] == mx["mx"]).select(
@@ -7046,11 +7017,9 @@ def customer_value_rank_profile(spark, sf_dir):
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey")
         .agg(
-            F.round(
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-                / 100.0,
-                2,
-            ).alias("total_spend")
+            F.round(F.sum(_cents("o_totalprice")) / 100.0, 2).alias(
+                "total_spend"
+            )
         )
     )
     w = Window.orderBy(F.desc("total_spend"), F.asc("c_custkey"))
@@ -7382,7 +7351,7 @@ def keyed_table_upsert(spark, sf_dir):
     base = orders.select(
         F.col("o_orderkey").alias("k"),
         F.lit(0).alias("version"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("total_cents"),
+        _cents("o_totalprice").alias("total_cents"),
         F.col("o_orderstatus").alias("status"),
     )
     puts = base.filter(F.col("k") % 10 == 3).select(
@@ -8711,7 +8680,7 @@ def csv_roundtrip(spark, sf_dir):
         ),
         header=True,
     )
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = _cents("o_totalprice")
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum(cents) / 100.0, 2).alias("total_price"),
@@ -8731,7 +8700,7 @@ def orc_roundtrip(spark, sf_dir):
     path = _work_dir(spark, "orc_roundtrip") + "/orders"
     od.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = _cents("o_totalprice")
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum(cents) / 100.0, 2).alias("total_price"),
@@ -8785,13 +8754,9 @@ def part_profit_by_nation_year(spark, sf_dir):
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    profit = (
-        F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
-        * (100 - F.round(F.col("l_discount") * 100, 0).cast("bigint"))
-        - F.round(F.col("p_retailprice") * 100, 0).cast("bigint")
-        * 100
-        * F.round(F.col("l_quantity"), 0).cast("bigint")
-    )
+    profit = _cents4() - _cents("p_retailprice") * 100 * F.round(
+        F.col("l_quantity"), 0
+    ).cast("bigint")
     j = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -8853,10 +8818,7 @@ def returned_revenue_top_customers(spark, sf_dir):
         "c_custkey", "c_name", "c_nationkey"
     )
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    rev = (
-        F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
-        * (100 - F.round(F.col("l_discount") * 100, 0).cast("bigint"))
-    )
+    rev = _cents4()
     agg = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         # customer is unhinted: fixture-scale stats broadcast it, cluster
@@ -8884,7 +8846,7 @@ def returned_revenue_top_customers(spark, sf_dir):
     """
     SELECT o_year,
            round(CAST(nat AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS mkt_share,
-           round(tot / 10000.0, 2) AS market_revenue
+           CAST((tot + 50) // 100 AS DOUBLE) / 100.0 AS market_revenue
     FROM (
       SELECT CAST(year(o_orderdate) AS INT) AS o_year,
              sum(CASE WHEN supp_nation = 'NATION_7' THEN rev ELSE 0 END) AS nat,
@@ -8933,10 +8895,7 @@ def supplier_mkt_share_by_year(spark, sf_dir):
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
     supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    rev = (
-        F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
-        * (100 - F.round(F.col("l_discount") * 100, 0).cast("bigint"))
-    )
+    rev = _cents4()
     j = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, F.col("o_custkey") == cust.c_custkey)
@@ -8957,13 +8916,14 @@ def supplier_mkt_share_by_year(spark, sf_dir):
             )
         ).alias("nat"),
         F.sum("rev").alias("tot"),
+        _half_up_cents(F.col("rev"), 100).alias("market_revenue"),
     )
     return agg.select(
         "o_year",
         F.round(F.col("nat").cast("double") / F.col("tot").cast("double"), 6).alias(
             "mkt_share"
         ),
-        F.round(F.col("tot") / 10000.0, 2).alias("market_revenue"),
+        "market_revenue",
     )
 
 
@@ -9084,7 +9044,7 @@ def winsorized_event_stats(spark, sf_dir):
     (the bounds CTE is group-cardinality-sized and rejoins only the
     windowed projection)."""
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = _cents("value")
     w = Window.partitionBy("event_type").orderBy(F.asc("value"), F.asc("event_id"))
     wn = Window.partitionBy("event_type")
     v = ev.select(
@@ -10130,7 +10090,7 @@ def exact_value_quartiles(spark, sf_dir):
     "volume_shipping",
     """
     SELECT supp_nation, cust_nation, l_year,
-           round(sum(rev) / 10000.0, 2) AS revenue
+           CAST((sum(rev) + 50) // 100 AS DOUBLE) / 100.0 AS revenue
     FROM (
       SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              CAST(year(l_shipdate) AS INT) AS l_year,
@@ -10196,7 +10156,7 @@ def volume_shipping(spark, sf_dir):
             _cents4().alias("rev"),
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(F.round(F.sum("rev") / 10000.0, 2).alias("revenue"))
+        .agg(_half_up_cents(F.col("rev"), 100).alias("revenue"))
     )
 
 
@@ -10205,9 +10165,9 @@ def volume_shipping(spark, sf_dir):
     """
     SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
            coalesce(l_linestatus, 'ALL') AS l_linestatus,
-           round(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-                     * (100 - CAST(round(l_discount * 100, 0) AS BIGINT)))
-                 / 10000.0, 2) AS revenue,
+           CAST((sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
+                          * (100 - CAST(round(l_discount * 100, 0) AS BIGINT)))
+                      + 50) // 100 AS DOUBLE) / 100.0 AS revenue,
            count(*) AS n_lines
     FROM lineitem
     GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
@@ -10229,7 +10189,7 @@ def grouping_sets_revenue(spark, sf_dir):
         "l_returnflag",
         "l_linestatus",
     ).agg(
-        F.round(F.sum(_cents4()) / 10000.0, 2).alias("revenue"),
+        _half_up_cents(_cents4(), 100).alias("revenue"),
         F.count(F.lit(1)).alias("n_lines"),
     )
     return g.select(
@@ -10633,7 +10593,7 @@ def brand_price_quantity_slope(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     q = F.col("l_quantity").cast("bigint")
-    y = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
+    y = _cents("l_extendedprice")
     stats = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
@@ -10736,7 +10696,7 @@ def jsonl_roundtrip(spark, sf_dir):
         path,
         schema="event_id bigint, user_id bigint, event_type string, value double",
     )
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
+    cents = _cents("value")
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum(cents) / 100.0, 2).alias("total_value"),

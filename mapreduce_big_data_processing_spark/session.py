@@ -22,6 +22,21 @@ def _local_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def _default_driver_mem() -> str:
+    """Half of the machine's memory (MemTotal in /proc/meminfo), capped at
+    16g. A heap sized past the machine grows until the kernel kills the
+    JVM; ``SPARK_GRAFT_DRIVER_MEM`` overrides this default."""
+    cap_mb = 16 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return f"{cap_mb}m"
+    return f"{min(total_kb // 2048, cap_mb)}m"
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply correctness-critical runtime conf to an existing session.
 
@@ -101,7 +116,10 @@ def get_session(
             "true" if adaptive else "false",
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -14,7 +14,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session("engine-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    s = get_session("engine-tests", cpus=int(cpus))
     yield s
 
 

@@ -9,6 +9,8 @@ between one shuffle and two at 100 TB.
 
 from __future__ import annotations
 
+import pytest
+
 from mapreduce_big_data_processing_spark import queries as Q
 
 
@@ -871,3 +873,43 @@ def test_global_rank_has_no_single_partition_window(spark, sf_dir):
     assert "rangepartitioning" in plan
     assert "BroadcastHashJoin" in plan  # the offsets join
     assert "MapInPandas" in plan  # the index pass
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, descending into the adaptive plan."""
+    yield node
+    if node.nodeName() == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+@pytest.mark.parametrize(
+    "name", ["pricing_summary", "brand_volume", "revenue_by_nation"]
+)
+def test_money_aggregates_are_bigint_without_per_row_round(spark, sf_dir, name):
+    """Star-schema money runs on exact integer cents: the aggregation
+    buffers hold no decimal (a per-row decimal(38) sum costs ~1 s per
+    600k lineitems), and nothing at or below the map-side aggregate calls
+    round(), which builds a java.math.BigDecimal per row."""
+    plan = Q.QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan()
+    aggs = [n for n in _plan_nodes(plan) if "Aggregate" in n.nodeName()]
+    partial = [
+        n for n in aggs
+        if any(e.mode().toString() == "Partial" for e in _seq(n.aggregateExpressions()))
+    ]
+    assert partial
+    for node in aggs:
+        buffers = [
+            a.dataType().simpleString() for a in _seq(node.aggregateBufferAttributes())
+        ]
+        assert not any(b.startswith("decimal") for b in buffers), buffers
+    for node in partial:
+        assert "round(" not in node.simpleString(10_000)
+        assert "round(" not in node.child().treeString()
