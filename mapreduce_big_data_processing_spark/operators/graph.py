@@ -412,12 +412,16 @@ def label_propagation(
             "node", F.coalesce("label", F.col("node")).alias("label")
         )
 
-    # checkpoint_last=False: the decode chain (or the caller's single
-    # action on the string path) references the final state exactly once
+    # ONE checkpoint, after round max_iter - 1: the returned plan holds a
+    # single round over a checkpoint instead of the whole loop, so every
+    # action on it re-runs at most that round. The final round is left
+    # lazy (checkpoint_last=False): checkpointing it would be an extra
+    # job that materializes what the caller's action computes anyway.
     out = iterate(
         vertices.withColumn("label", F.col("node")),
         step,
         max_iter,
+        checkpoint_every=max_iter - 1,
         checkpoint_last=False,
     )
     if vocab is None:

@@ -1015,26 +1015,27 @@ def embedding_near_dup(
     if plane_tables is not None:
         # ONE shuffle on (table_id, bucket): each row lands in T buckets
         # (its per-table signatures), and verification runs PER BUCKET as a
-        # vectorized NumPy block matmul inside applyInPandas — vectors move
-        # once per (table, bucket) copy (T× the corpus, bounded), pair
-        # enumeration + exact cosine + threshold all happen inside the
-        # kernel, and only SURVIVING pairs leave the executor. The naive
-        # alternative (equi-join expanding to candidate pairs, then an
-        # expression-tree cosine per pair) shuffles the ~100×-amplified
-        # candidate set and pays an interpreted fold per pair — measured
-        # 6× slower at sf0.1 and quadratically worse with corpus growth.
+        # vectorized NumPy block matmul over each partition's bucket-sorted
+        # batches — vectors move once per (table, bucket) copy (T× the
+        # corpus, bounded), pair enumeration + exact cosine + threshold all
+        # happen inside the kernel, and only SURVIVING pairs leave the
+        # executor. The naive alternative (equi-join expanding to candidate
+        # pairs, then an expression-tree cosine per pair) shuffles the
+        # ~100×-amplified candidate set and pays an interpreted fold per
+        # pair — measured 6× slower at sf0.1 and quadratically worse with
+        # corpus growth.
         # The kernel's quadratic term — the similarity matrix — is TILED:
         # block pairs of ≤``block_rows`` rows bound it (128 MB at the 4096
         # default) regardless of bucket size, so a degenerate bucket (every
         # doc identical) degrades to more tiles, not an OOM. The LINEAR
-        # term (a bucket's raw vectors arriving as one pandas group) is
-        # bounded by ``max_bucket_rows``: buckets above it are salted into
-        # ceil(n/max_bucket_rows) sub-buckets by id hash and verified as
-        # within-sub plus cross-sub-pair groups — every pair lands in
+        # term (a bucket's raw vectors held at once for its verify call)
+        # is bounded by ``max_bucket_rows``: buckets above it are salted
+        # into ceil(n/max_bucket_rows) sub-buckets by id hash and verified
+        # as within-sub plus cross-sub-pair groups — every pair lands in
         # exactly one (min(sub_a,sub_b), max(sub_a,sub_b)) group, so the
-        # output is identical while no pandas group ever receives more
+        # output is identical while no verify call ever receives more
         # than ~2·max_bucket_rows vectors (AQE cannot split inside a
-        # pandas group; this does it structurally). Oversized buckets are
+        # group; this does it structurally). Oversized buckets are
         # found by a cheap counting pre-pass (signature projection only,
         # no vectors shuffled) whose >cap survivors broadcast back.
         import numpy as np
@@ -1289,9 +1290,48 @@ def embedding_near_dup(
                 return empty
             return pd.concat(outs, ignore_index=True)
 
-        id_type = dict(corpus.dtypes)[id_col]
-        cand = expanded.groupBy("table_id", "bucket", "ga", "gb").applyInPandas(
-            verify, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
+        keys = ["table_id", "bucket", "ga", "gb"]
+
+        def verify_sorted(batches):
+            # Each partition arrives sorted on ``keys`` in Arrow batches: a
+            # group ends where a key changes, and the batch's trailing
+            # group carries into the next batch, where it may go on. A
+            # one-row group can pair with nothing, so only groups of two
+            # or more rows reach ``verify``; a grouped applyInPandas would
+            # build a pandas frame and make a call for every group.
+            import numpy as np
+            import pandas as pd
+
+            carry = None
+            for pdf in batches:
+                if carry is not None:
+                    pdf = pd.concat([carry, pdf], ignore_index=True)
+                if len(pdf) == 0:
+                    continue
+                k = pdf[keys].to_numpy()
+                starts = np.flatnonzero(np.any(k[1:] != k[:-1], axis=1)) + 1
+                bounds = np.concatenate(([0], starts))
+                outs = [
+                    verify(pdf.iloc[a:b])
+                    for a, b in zip(bounds[:-1], bounds[1:])
+                    if b - a > 1
+                ]
+                outs = [o for o in outs if len(o)]
+                if outs:
+                    yield pd.concat(outs, ignore_index=True)
+                carry = pdf.iloc[bounds[-1] :]
+            if carry is not None and len(carry) > 1:
+                out = verify(carry)
+                if len(out):
+                    yield out
+
+        cand = (
+            expanded.repartition(*keys)
+            .sortWithinPartitions(*keys)
+            .mapInPandas(
+                verify_sorted,
+                schema=f"id_a {id_type}, id_b {id_type}, cosine double",
+            )
         )
         # a pair colliding in >1 table appears once per table with an
         # identical cosine — keep one copy

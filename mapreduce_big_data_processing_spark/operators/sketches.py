@@ -138,34 +138,35 @@ def theta_distinct_overlap(
     """Distinct-value overlap across groups via Theta sketches (the
     DataSketches set-operation family): |A ∩ B| estimated by intersecting
     per-group sketch states — the question HLL cannot answer (HLL unions
-    only). One scan builds a sketch per group; the intersection is
-    sketch-sized work. Output: one row (groups..., per-group estimates,
-    intersection_est)."""
-    sketches = (
-        df.filter(F.col(group_col).isin(list(groups)))
-        .groupBy(group_col)
-        .agg(F.theta_sketch_agg(F.col(value_col)).alias("theta"))
-    )
-    merged = sketches.agg(
-        F.theta_sketch_estimate(
-            F.theta_intersection_agg(F.col("theta"))
-        ).alias("intersection_est"),
-        F.theta_sketch_estimate(F.theta_union_agg(F.col("theta"))).alias(
-            "union_est"
-        ),
-    )
-    # per-group point estimates in the SAME scan (conditional sketch aggs)
-    singles = df.agg(
+    only). One scan builds a sketch per group into ONE row (conditional
+    sketch aggregates); the intersection and union are then scalar,
+    sketch-sized work on that row. Output: one row (per-group estimates,
+    intersection_est, union_est).
+
+    The set operations stay scalar on purpose: ``theta_intersection_agg``
+    over a table of per-group sketches throws (``SketchesStateException``)
+    whenever a partition of that table is empty — with AQE off the
+    sketches' shuffle leaves most partitions empty."""
+    sketches = df.agg(
         *[
-            F.theta_sketch_estimate(
-                F.theta_sketch_agg(
-                    F.when(F.col(group_col) == g, F.col(value_col))
-                )
-            ).alias(f"distinct_{i}")
+            F.theta_sketch_agg(F.when(F.col(group_col) == g, F.col(value_col))).alias(
+                f"__theta_{i}"
+            )
             for i, g in enumerate(groups)
         ]
     )
-    return singles.crossJoin(F.broadcast(merged))
+    cols = [F.col(f"__theta_{i}") for i in range(len(groups))]
+    inter, union = cols[0], cols[0]
+    for c in cols[1:]:
+        inter, union = F.theta_intersection(inter, c), F.theta_union(union, c)
+    return sketches.select(
+        *[
+            F.theta_sketch_estimate(c).alias(f"distinct_{i}")
+            for i, c in enumerate(cols)
+        ],
+        F.theta_sketch_estimate(inter).alias("intersection_est"),
+        F.theta_sketch_estimate(union).alias("union_est"),
+    )
 
 
 def kll_quantile_rollup(

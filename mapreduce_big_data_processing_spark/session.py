@@ -18,6 +18,10 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: the directory holding this package, for the Python workers' import path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _local_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
@@ -76,6 +80,15 @@ def get_session(
     for itself when shuffles are large; callers that KNOW the workload is
     sub-GB (bench at sf≤0.1) pass False, exactly as shuffle partitions are
     sized to the local core count.
+
+    Python workers start from this package's ``worker_daemon`` rather than
+    pyspark's own daemon: it keeps each task from re-reading the
+    ``pyspark.zip`` archive directory (about 0.2 s per task with Python
+    3.11 on a 4-vCPU VM), with imports behaving as before.
+    ``spark.executorEnv.PYTHONPATH`` lets the daemon import it from any
+    working directory. Both are builder-time conf, so they apply only to
+    a session this function creates; a session created elsewhere keeps
+    pyspark's daemon.
     """
     n = cpus or _local_cpus()
     builder = (
@@ -123,5 +136,7 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return tune(builder.getOrCreate())

@@ -155,6 +155,22 @@ def test_label_propagation_two_communities(spark):
     assert labels["a"] != labels["x"]
 
 
+def test_label_propagation_checkpoints_before_last_round(spark):
+    """LPA keeps one checkpoint, after round max_iter - 1: the returned
+    plan reads the checkpoint's RDD instead of re-running the loop, and
+    two actions on it give the same rows."""
+    pairs = [("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 1.0), ("x", "y", 1.0)]
+    values = ", ".join(
+        f"('{s}', '{d}', {w})" for s, d, w in pairs + [(d, s, w) for s, d, w in pairs]
+    )
+    # a VALUES relation, not createDataFrame: no input RDD scan of its own
+    edges = spark.sql(f"SELECT * FROM VALUES {values} AS t(src, dst, weight)")
+    out = G.label_propagation(edges, max_iter=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan
+    assert sorted(out.collect()) == sorted(out.collect())
+
+
 def test_kmeans_trace_ch9(spark):
     """B7 — K-Means numeric trace, `ppt/Ch9….pdf p.29-38`: points A(1,1),
     B(2,1), C(4,3), D(5,4), k=2, init A and C → after iter 1 clusters

@@ -683,3 +683,56 @@ def test_retrieval_ndcg_margins(spark, sf_dir):
             if v != 0.0:
                 worst = min(worst, abs(((v * 1e6) % 1.0) - 0.5))
     assert worst > 1e-6, f"6dp round-half margin too thin: {worst}"
+
+
+@pytest.mark.parametrize("n_probe", [1, 2])
+@pytest.mark.parametrize("max_bucket_rows", [4, 8192])
+@pytest.mark.parametrize("batch_rows", [3, None])
+def test_near_dup_verify_kernel_matches_oracle(
+    spark, sf_dir, batch_rows, max_bucket_rows, n_probe
+):
+    """The verify kernel walks each partition's bucket-sorted Arrow
+    batches. Three-row batches split groups across batches (the carried
+    trailing group); a 4-row cap forces the salted cross-sub-bucket
+    groups; a second probe adds probe rows to the groups. Every
+    combination must equal the DuckDB oracle for the same plane tables."""
+    import duckdb
+
+    from mapreduce_big_data_processing_spark.queries import (
+        _NEAR_DUP_TABLES_DENSE as tables,
+        _near_dup_lsh_sql,
+        _near_dup_probed_sql,
+    )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    if batch_rows is not None:
+        spark.conf.set(key, str(batch_rows))
+    try:
+        emb = catalog.load(spark, "embeddings", sf_dir)
+        got = {
+            (r.id_a, r.id_b, r.cosine)
+            for r in S.embedding_near_dup(
+                emb,
+                threshold=0.45,
+                plane_tables=tables,
+                max_bucket_rows=max_bucket_rows,
+                n_probe=n_probe,
+            )
+            .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+            .collect()
+        }
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    sql = (
+        _near_dup_lsh_sql(tables, 0.45)
+        if n_probe == 1
+        else _near_dup_probed_sql(tables, 0.45, n_probe=n_probe)
+    )
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'")
+    want = {tuple(r) for r in con.sql(sql).fetchall()}
+    assert got == want and len(want) > 0

@@ -276,3 +276,33 @@ def test_count_min_estimate_unseen_key_is_zero_or_collision(spark):
     est = {r["k"]: r["est"] for r in SK.count_min_estimate(cm, keys, "k", 3, 64).collect()}
     assert est["a"] == 5 and est["b"] == 3
     assert est["never"] in (0, 3, 5, 8)  # 0 unless all d cells collide
+
+
+def test_theta_overlap_aqe_off_proper_subset(spark, tmp_path):
+    """With AQE off, an aggregate intersection over a table of per-group
+    sketches raised SketchesStateException (an empty shuffle partition's
+    buffer had seen no intersection). The data has a proper-subset
+    overlap — 1000 clickers, 1000 purchasers, 666 in both — which the
+    fixtures, whose click and purchase audiences coincide, cannot tell
+    from a wrong intersection. Below the sketch's nominal size every
+    estimate is exact."""
+    rows = (
+        [(u, "click") for u in range(1000)]
+        + [(u, "purchase") for u in range(334, 1334)]
+        + [(u, "view") for u in range(2000, 2100)]
+    )
+    path = str(tmp_path / "events.parquet")
+    spark.createDataFrame(rows, "user_id long, event_type string").repartition(
+        4
+    ).write.parquet(path)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        row = SK.theta_distinct_overlap(
+            spark.read.parquet(path), "event_type", "user_id", ["click", "purchase"]
+        ).collect()[0]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert (
+        row["distinct_0"], row["distinct_1"], row["intersection_est"], row["union_est"]
+    ) == (1000, 1000, 666, 1334)
