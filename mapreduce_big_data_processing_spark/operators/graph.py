@@ -97,20 +97,47 @@ def pagerank(
     # the (smaller) ranks side ever shuffles.
     spark = edges.sparkSession
     edges = edges.repartition("src").cache()
-    n_edges = edges.count()
+    # ONE probe job materializes the edge cache and measures the graph
+    # (guide §1.2: one fixed-cost job, not three). Each edge explodes into
+    # its two endpoints, one groupBy gives every node its out-degree and
+    # whether it has an in-edge, and one row of totals follows: the edge
+    # count that sizes the loop, and n = |vertices| with both structural
+    # gates:
+    #   has_dangling: a vertex with no out-edge exists  ⇔  |distinct src| < n
+    #   all_have_in:  every vertex has an in-edge       ⇔  |distinct dst| = n
+    # (a single scan and one exchange: on a 4-vCPU VM ~150 ms cheaper at
+    # the 0.1× corpus than three countDistincts over a src/dst union).
+    ends = F.explode(F.array(
+        F.struct(F.col("src").alias("node"), F.lit(1).alias("o"), F.lit(0).alias("i")),
+        F.struct(F.col("dst").alias("node"), F.lit(0).alias("o"), F.lit(1).alias("i")),
+    ))
+    # cached: the loop takes its vertex set (and dangling set) from it
+    per_node = edges.select(ends.alias("e")).groupBy("e.node").agg(
+        F.sum("e.o").alias("out"), F.max("e.i").alias("has_in")
+    ).cache()
+    n_edges, n, cs, cd = per_node.agg(
+        F.sum("out"),
+        F.count("node"),
+        F.count(F.when(F.col("out") > 0, F.col("node"))),
+        F.count(F.when(F.col("has_in") == 1, F.col("node"))),
+    ).first()
+    has_dangling = cs < n
+    all_have_in = not has_dangling and cd == n
     # SMALL-GRAPH latency gate: when the measured edge count implies
     # fewer partitions than the cluster has cores, the conf-default
     # partitioning is pure scheduler tax — every per-round stage (ranks
     # exchange, contrib groupBy, vertices join) schedules empty tasks
-    # 10×+ over. Re-cache at the measured size (cheap: reads the warm
-    # cache) and scope the loop's shuffle partitions to match — the
-    # coalescing AQE would apply, made deterministic and available when
-    # AQE is off (the bench protocol). LARGE graphs keep the session's
-    # partitioning untouched: forcing ceil(n/100k) partitions on a
-    # Zipf-skewed 10× graph measured 35% SLOWER than conf+AQE (hot-word
+    # 10×+ over. Scope the loop's shuffle partitions to the measured size
+    # — the coalescing AQE would apply, made deterministic and available
+    # when AQE is off (the bench protocol). LARGE graphs keep the
+    # session's partitioning untouched: forcing ceil(n/100k) partitions on
+    # a Zipf-skewed 10× graph measured 35% SLOWER than conf+AQE (hot-word
     # partitions straggle every round), so the gate only ever narrows.
     dp = spark.sparkContext.defaultParallelism
     nparts = max(1, math.ceil(n_edges / 100_000))
+    # one partition's worth of edges is broadcast to every round instead
+    # of being re-cached at the scoped width (see step)
+    broadcast_edges = nparts == 1
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # With AQE on, coalescePartitions.initialPartitionNum (not
     # shuffle.partitions) is the shuffle STARTING point, so scope that key
@@ -124,52 +151,22 @@ def pagerank(
         prev_ipn = None
     scoped = nparts < dp
     if scoped:
-        small = edges.repartition(nparts, "src").cache()
-        small.count()  # materialize before dropping the wide cache
-        edges.unpersist()
-        edges = small
+        if not broadcast_edges:
+            # re-cache at the measured width (cheap: reads the warm cache)
+            # so the edge side already meets every round's join partitioning
+            small = edges.repartition(nparts, "src").cache()
+            small.count()  # materialize before dropping the wide cache
+            edges.unpersist()
+            edges = small
         spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
         if prev_ipn is not None:
             spark.conf.set(_IPN, str(nparts))
     try:
-        # graph structure is fixed across iterations: ONE tagged-union
-        # aggregate yields n = |vertices| AND both structural gates —
-        #   has_dangling: a vertex with no out-edge exists  ⇔  |distinct src| < n
-        #   all_have_in:  every vertex has an in-edge       ⇔  |distinct dst| = n
-        # (both follow because src/dst node sets are subsets of the vertex
-        # set by construction). r10 ran vertices.count() plus a separate
-        # two-countDistinct probe; folding n into the same aggregate is one
-        # fixed-cost job instead of two at every scale (guide §1.2).
-        tagged = edges.select(F.col("src").alias("node"), F.lit(1).alias("s")
-        ).unionAll(edges.select(F.col("dst").alias("node"), F.lit(2).alias("s")))
-        n, cs, cd = tagged.agg(
-            F.countDistinct("node"),
-            F.countDistinct(F.when(F.col("s") == 1, F.col("node"))),
-            F.countDistinct(F.when(F.col("s") == 2, F.col("node"))),
-        ).first()
-        has_dangling = cs < n
-        all_have_in = not has_dangling and cd == n
-        vertices = (
-            edges.select(F.col("src").alias("node"))
-            .unionByName(edges.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        if has_dangling or not all_have_in:
-            # the loop re-reads vertices every round (rank re-attach /
-            # dangling set) — cache it. COVERED graphs consume it exactly
-            # once (initial ranks, or the encode vocab build), so caching
-            # there would be a pure extra materialization pass (r10 paid
-            # vertices.count() on every pagerank call for this).
-            vertices = vertices.cache()
-        # dangling node SET is only needed per-iteration on dangling
-        # graphs — build (and cache) it lazily there; covered graphs never
-        # pay for it
+        vertices = per_node.select("node")
+        # the dangling node SET is only needed on dangling graphs
         dangling_nodes = None
         if has_dangling:
-            out_nodes = edges.select(F.col("src").alias("node")).distinct()
-            dangling_nodes = vertices.join(
-                out_nodes, "node", "left_anti"
-            ).cache()
+            dangling_nodes = per_node.where(F.col("out") == 0).select("node")
 
         # Dictionary-encode STRING node ids to int64 for the loop (guide
         # §2.3 — narrower types): every round hash-probes the join key and
@@ -213,57 +210,76 @@ def pagerank(
                 edges.unpersist()
                 edges = enc
                 if dangling_nodes is not None:
-                    # materialize the encoded dangling set, THEN drop the
-                    # superseded pre-encode cache (r10 ADVICE) — its
-                    # lineage reaches back through the already-unpersisted
-                    # string edges, so an unmaterialized swap would
-                    # re-execute the whole upstream build on first use
-                    old_dangling = dangling_nodes
+                    # materialize the encoded dangling set before the
+                    # string per-node cache it is built from is released,
+                    # so the loop never re-runs that vertex-sized join
                     dangling_nodes = (
                         dangling_nodes.join(vocab, "node", "inner")
                         .select(F.col("__nid").alias("node"))
                         .cache()
                     )
                     dangling_nodes.count()  # vertex-sized; dangling-only path
-                    old_dangling.unpersist()
-                # the string vertex cache is superseded by the (cached,
+                # the string per-node cache is superseded by the (cached,
                 # fully materialized by the collision-check agg) vocab —
                 # release it; vocab itself must stay cached until the
                 # decoded result is consumed (decode() reads it)
-                vertices.unpersist()
+                per_node.unpersist()
                 vertices = vocab.select(F.col("__nid").alias("node"))
             else:
                 cand.unpersist()
 
-        def step(ranks: DataFrame, i: int) -> DataFrame:
-            # The vertex-sized ranks side BROADCASTS every round — measured
-            # DELIBERATE (r10 verdict #6 investigated this round): forcing a
-            # SHUFFLE_HASH rank attach instead cut the sf0.1 job count 13→6
-            # but moved no wall time, and at the 100× fixture it ran 55.3 →
-            # 70.4 s (min-of-2 A/B) — the per-round ~3 MB broadcast build is
-            # cheaper than re-exchanging the rank aggregate's output against
-            # the edge cache's partitioning. Left on the planner's choice.
-            contrib = (
-                edges.join(ranks, edges.src == ranks.node)
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("pr") * F.col("weight")).alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("contrib"))
+        # Which join side broadcasts depends on the graph's size:
+        # - one partition's worth of edges (nparts == 1): the EDGES, hinted
+        #   once here. With AQE off every round reuses the same broadcast
+        #   (ReusedExchange), and the single-partition ranks (see step)
+        #   already meet the next round's groupBy, so all rounds between
+        #   checkpoints run in one stage with no Exchange. Broadcasting the
+        #   ranks instead cost one broadcast job per round. (With AQE on,
+        #   Spark 4.1 does not reuse a broadcast of a cached relation, so
+        #   each round rebuilds it: one job per round, as before.) The
+        #   not-null filter is the one the optimizer infers for every round
+        #   whose output feeds another round's join; stating it gives the
+        #   last round the same broadcast, so one exchange serves all.
+        # - larger graphs: the vertex-sized RANKS, on the planner's choice
+        #   (r10 verdict #6): a SHUFFLE_HASH rank attach instead moved no
+        #   wall time at sf0.1, and at the 100× fixture it ran 55.3 →
+        #   70.4 s (min-of-2 A/B) — the per-round ~3 MB ranks broadcast is
+        #   cheaper than re-exchanging the rank aggregate's output against
+        #   the edge cache's partitioning.
+        if broadcast_edges:
+            edge_side = F.broadcast(
+                edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
             )
-            if all_have_in and not has_dangling:
-                # contrib's key set IS the vertex set: skip the re-attach
-                # join entirely (coalesce would never fire)
-                return contrib.select(
-                    "node",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping) * F.col("contrib")
-                    ).alias("pr"),
-                )
+        else:
+            edge_side = edges
+        teleport = F.lit((1.0 - damping) / n)
+        # a dangling round reads the previous ranks twice (contributions
+        # and dangling mass), so that path checkpoints every round, as
+        # convergence mode does: plan and job count then grow linearly in
+        # max_iter instead of doubling per round
+        cadence = 1 if has_dangling or tol is not None else checkpoint_every
+        dst_node = F.col("dst").alias("node")
+        in_mass = F.sum(F.col("pr") * F.col("weight"))
+        new_pr = (teleport + F.lit(damping) * in_mass).alias("pr")
+
+        def step(ranks: DataFrame, i: int) -> DataFrame:
+            if broadcast_edges and (i == 0 or (cadence and i % cadence == 0)):
+                # a segment starts from one partition of ranks, so no round
+                # needs an Exchange whatever the session's partition count:
+                # a lazy tail runs after the conf scope ends, and an AQE
+                # checkpoint does not keep its partitioning
+                ranks = ranks.coalesce(1)
+            joined = edge_side.join(ranks, edge_side.src == ranks.node)
+            by_dst = joined.groupBy(dst_node)
+            if all_have_in:
+                # the groupBy's key set IS the vertex set: no re-attach
+                # join, and the aggregate yields the new rank directly
+                return by_dst.agg(new_pr)
+            contrib = by_dst.agg(in_mass.alias("contrib"))
             new_ranks = vertices.join(contrib, "node", "left")
             if has_dangling:
+                # reads `ranks` a second time: the loop checkpoints every
+                # round on this path, or the plan would double per round
                 dangling = (
                     ranks.join(dangling_nodes, "node", "left_semi")
                     .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
@@ -271,7 +287,7 @@ def pagerank(
                 return new_ranks.crossJoin(F.broadcast(dangling)).select(
                     "node",
                     (
-                        F.lit((1.0 - damping) / n)
+                        teleport
                         + F.lit(damping)
                         * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("dm") / n)
                     ).alias("pr"),
@@ -279,7 +295,7 @@ def pagerank(
             return new_ranks.select(
                 "node",
                 (
-                    F.lit((1.0 - damping) / n)
+                    teleport
                     + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
                 ).alias("pr"),
             )
@@ -300,10 +316,7 @@ def pagerank(
             # exactly once, so the last cadence checkpoint would be a pure
             # extra materialization job
             return decode(
-                iterate(
-                    ranks, step, max_iter, checkpoint_every,
-                    checkpoint_last=False,
-                )
+                iterate(ranks, step, max_iter, cadence, checkpoint_last=False)
             )
 
         # convergence mode (`ppt/Ch8….pdf p.26` alternative 2): stop when
@@ -584,15 +597,19 @@ def connected_components_star(
         return parents.unionByName(selfedge).distinct()
 
     e = e0.filter(F.col("src") != F.col("dst")).localCheckpoint(eager=True)
+    # each round counts only its new edge table: the previous one's count
+    # is carried over (one job per round fewer)
+    e_count = e.count()
     converged = False
     for _ in range(max_iter):
         nxt = small_star(large_star(e)).localCheckpoint(eager=True)
-        same_count = nxt.count() == e.count()
+        nxt_count = nxt.count()
+        same_count = nxt_count == e_count
         if same_count and nxt.join(e, ["src", "dst"], "left_anti").isEmpty():
             e = nxt
             converged = True
             break
-        e = nxt
+        e, e_count = nxt, nxt_count
     if not converged:
         # an unconverged assignment is NOT component minima — labels are
         # merely closer to them than the input. Surface it loudly instead

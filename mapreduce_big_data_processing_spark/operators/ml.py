@@ -424,19 +424,22 @@ def svm_train(
     """
     import numpy as np
 
-    classes = [
-        r[0]
-        for r in train.select(label_col).distinct().orderBy(label_col).collect()
-    ]
-    cls_idx = {c: j for j, c in enumerate(classes)}
-    C = len(classes)
-
     X = train.select(
         F.col(label_col).alias("__y"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
     ).cache()
-    n = X.count()
-    d = len(X.first()["__v"])
+    # ONE probe job materializes the feature cache and returns the sorted
+    # class list, the row count and the dimension. Labels are collected as
+    # one-field structs so a null label is kept, sorted first as
+    # orderBy(label) would.
+    label_rows, n, d = X.agg(
+        F.sort_array(F.collect_set(F.struct("__y"))),
+        F.count("*"),
+        F.max(F.size("__v")),
+    ).first()
+    classes = [r[0] for r in label_rows]
+    cls_idx = {c: j for j, c in enumerate(classes)}
+    C = len(classes)
     W = np.zeros((C, d + 1))
 
     spark = train.sparkSession

@@ -123,7 +123,6 @@ def test_edge_normalization_project2(spark):
     assert qf["戚长发"] == pytest.approx(0.25)
 
 
-@pytest.mark.slow
 def test_pagerank_dangling_mass(spark):
     """G3 — dangling-node handling (`ppt/Ch8….pdf p.11-14`): a→b with b a
     sink. One iteration by hand: pr(a)=0.075+0.85·(0+0.25)=0.2875,
