@@ -10,9 +10,15 @@ lineage growth across iterations — is handled with `localCheckpoint`
 cadence (the reference never faced it: every iteration was a full
 HDFS round-trip).
 
-Scale posture: each iteration is one shuffle (groupBy dst) plus one join on
+Scale posture: PageRank takes one of two paths by the measured edge count.
+A graph of at most `_PARTITION_EDGES` edges (one partition's worth) runs
+every round inside ONE Arrow task: on such graphs Spark's per-round fixed
+cost (a plan, a broadcast, a job) dominates the operator work, and the
+whole graph fits one worker's memory. Larger graphs iterate as a driver
+loop in which each round is one shuffle (groupBy dst) plus one join on
 src; ranks/labels DataFrames are small relative to edges and stay
-cluster-side; no driver collection except the convergence scalar.
+cluster-side, with no driver collection except the convergence scalar.
+The other operators always take the driver loop.
 """
 
 from __future__ import annotations
@@ -25,6 +31,11 @@ from pyspark.sql import functions as F
 #: rounds repay it ~0.4 s/round per 33 M edges (measured 6×/round at the
 #: 100× fixture), so rounds dominate from roughly a million edges up
 _ENCODE_MIN_EDGES = 1_000_000
+
+#: edges per partition of pagerank's loop, and the small-graph gate: a graph
+#: of at most this many edges is one partition's worth, and runs every round
+#: in one Arrow task (see `_pagerank_one_task`)
+_PARTITION_EDGES = 100_000
 
 
 def build_cooccurrence_graph(pair_counts: DataFrame) -> DataFrame:
@@ -67,10 +78,24 @@ def pagerank(
     Mirrors `ppt/Ch8….pdf p.21-24` (contribution pass + recompute, d=0.85)
     with the sink fix of p.11-14 as mass redistribution. Fixed iteration
     count (`ppt/Ch8….pdf p.26` alternative 1) keeps the plan deterministic
-    for differential testing; convergence-threshold mode is a trivial
-    driver-loop variant. Output: (node, pr).
+    for differential testing; convergence mode (``tol``, alternative 2)
+    stops after the first round whose Σ|Δpr| is below ``tol``, which is
+    ``iterate_until``'s rule. Output: (node, pr).
 
-    CONCURRENCY CAVEAT: the small-graph latency gate scopes the
+    One probe job caches and measures the edges; the edge count then picks
+    the path:
+
+    - at most ``_PARTITION_EDGES`` edges (one partition's worth): every
+      round runs inside ONE Arrow task (:func:`_pagerank_one_task`). At
+      this size a round is microseconds of NumPy, while a Spark round
+      costs a plan, a broadcast and a job, and convergence mode adds a
+      checkpoint and a scalar job per round. The task runs the whole loop
+      inside the caller's action.
+    - larger graphs: a driver loop of DataFrame rounds (``plans.iterate``),
+      one shuffle plus one ranks join per round, lineage cut by
+      checkpoints, and shuffle partitions scoped to the measured size.
+
+    CONCURRENCY CAVEAT (loop path only): the partition-count gate scopes the
     session-global ``spark.sql.shuffle.partitions`` for the duration of
     the loop (restored in a ``finally``; pinned by test_conf_scope). That
     mutation assumes the driver-protocol model of ONE query at a time on
@@ -86,8 +111,9 @@ def pagerank(
 
     from mapreduce_big_data_processing_spark.plans.iterate import iterate
 
-    # edges are consumed once per iteration: materialize them, or a lazy
-    # upstream (tokenize→pairs→normalize) re-executes 10× — the Spark twin
+    # edges are read by the probe and then once per round (or once by the
+    # one-task path): materialize them, or a lazy upstream
+    # (tokenize→pairs→normalize) re-executes 10× — the Spark twin
     # of the reference's per-iteration HDFS re-read, and the first thing
     # that kills iterative jobs at scale. Cache PRE-PARTITIONED on the
     # join key (NOT localCheckpoint: a checkpoint's LogicalRDD loses size
@@ -121,9 +147,14 @@ def pagerank(
         F.count(F.when(F.col("out") > 0, F.col("node"))),
         F.count(F.when(F.col("has_in") == 1, F.col("node"))),
     ).first()
+    # (a sum over no rows is NULL: an empty edge set has no edges)
+    nparts = max(1, math.ceil((n_edges or 0) / _PARTITION_EDGES))
+    if nparts == 1:
+        per_node.unpersist()  # only the loop reads the per-node table
+        return _pagerank_one_task(edges, damping, max_iter, tol)
     has_dangling = cs < n
     all_have_in = not has_dangling and cd == n
-    # SMALL-GRAPH latency gate: when the measured edge count implies
+    # Partition-count gate: when the measured edge count implies
     # fewer partitions than the cluster has cores, the conf-default
     # partitioning is pure scheduler tax — every per-round stage (ranks
     # exchange, contrib groupBy, vertices join) schedules empty tasks
@@ -134,10 +165,6 @@ def pagerank(
     # a Zipf-skewed 10× graph measured 35% SLOWER than conf+AQE (hot-word
     # partitions straggle every round), so the gate only ever narrows.
     dp = spark.sparkContext.defaultParallelism
-    nparts = max(1, math.ceil(n_edges / 100_000))
-    # one partition's worth of edges is broadcast to every round instead
-    # of being re-cached at the scoped width (see step)
-    broadcast_edges = nparts == 1
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # With AQE on, coalescePartitions.initialPartitionNum (not
     # shuffle.partitions) is the shuffle STARTING point, so scope that key
@@ -151,13 +178,12 @@ def pagerank(
         prev_ipn = None
     scoped = nparts < dp
     if scoped:
-        if not broadcast_edges:
-            # re-cache at the measured width (cheap: reads the warm cache)
-            # so the edge side already meets every round's join partitioning
-            small = edges.repartition(nparts, "src").cache()
-            small.count()  # materialize before dropping the wide cache
-            edges.unpersist()
-            edges = small
+        # re-cache at the measured width (cheap: reads the warm cache) so
+        # the edge side already meets every round's join partitioning
+        small = edges.repartition(nparts, "src").cache()
+        small.count()  # materialize before dropping the wide cache
+        edges.unpersist()
+        edges = small
         spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
         if prev_ipn is not None:
             spark.conf.set(_IPN, str(nparts))
@@ -228,30 +254,12 @@ def pagerank(
             else:
                 cand.unpersist()
 
-        # Which join side broadcasts depends on the graph's size:
-        # - one partition's worth of edges (nparts == 1): the EDGES, hinted
-        #   once here. With AQE off every round reuses the same broadcast
-        #   (ReusedExchange), and the single-partition ranks (see step)
-        #   already meet the next round's groupBy, so all rounds between
-        #   checkpoints run in one stage with no Exchange. Broadcasting the
-        #   ranks instead cost one broadcast job per round. (With AQE on,
-        #   Spark 4.1 does not reuse a broadcast of a cached relation, so
-        #   each round rebuilds it: one job per round, as before.) The
-        #   not-null filter is the one the optimizer infers for every round
-        #   whose output feeds another round's join; stating it gives the
-        #   last round the same broadcast, so one exchange serves all.
-        # - larger graphs: the vertex-sized RANKS, on the planner's choice
-        #   (r10 verdict #6): a SHUFFLE_HASH rank attach instead moved no
-        #   wall time at sf0.1, and at the 100× fixture it ran 55.3 →
-        #   70.4 s (min-of-2 A/B) — the per-round ~3 MB ranks broadcast is
-        #   cheaper than re-exchanging the rank aggregate's output against
-        #   the edge cache's partitioning.
-        if broadcast_edges:
-            edge_side = F.broadcast(
-                edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            )
-        else:
-            edge_side = edges
+        # The vertex-sized RANKS side broadcasts, on the planner's choice
+        # (r10 verdict #6): a SHUFFLE_HASH rank attach instead moved no wall
+        # time at sf0.1, and at the 100× fixture it ran 55.3 → 70.4 s
+        # (min-of-2 A/B) — the per-round ~3 MB ranks broadcast is cheaper
+        # than re-exchanging the rank aggregate's output against the edge
+        # cache's partitioning.
         teleport = F.lit((1.0 - damping) / n)
         # a dangling round reads the previous ranks twice (contributions
         # and dangling mass), so that path checkpoints every round, as
@@ -263,13 +271,7 @@ def pagerank(
         new_pr = (teleport + F.lit(damping) * in_mass).alias("pr")
 
         def step(ranks: DataFrame, i: int) -> DataFrame:
-            if broadcast_edges and (i == 0 or (cadence and i % cadence == 0)):
-                # a segment starts from one partition of ranks, so no round
-                # needs an Exchange whatever the session's partition count:
-                # a lazy tail runs after the conf scope ends, and an AQE
-                # checkpoint does not keep its partitioning
-                ranks = ranks.coalesce(1)
-            joined = edge_side.join(ranks, edge_side.src == ranks.node)
+            joined = edges.join(ranks, edges.src == ranks.node)
             by_dst = joined.groupBy(dst_node)
             if all_have_in:
                 # the groupBy's key set IS the vertex set: no re-attach
@@ -344,6 +346,49 @@ def pagerank(
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
             if prev_ipn is not None:
                 spark.conf.set(_IPN, prev_ipn)
+
+
+def _pagerank_one_task(
+    edges: DataFrame, damping: float, max_iter: int, tol: float | None
+) -> DataFrame:
+    """:func:`pagerank` of a one-partition graph as ONE lazy Arrow task.
+
+    The task reads every edge batch, maps node ids to dense indices and
+    runs the same recurrence with ``np.bincount``: the same start (1/N),
+    the same expression per round (teleport + d·(contrib +
+    dangling_mass/N)), and in ``tol`` mode the same stop (after the first
+    round whose Σ|Δpr| < tol). Only the summation order differs from the
+    Spark loop, so values agree to within a few ulps (pinned by
+    test_pagerank_one_task_matches_loop)."""
+    import numpy as np
+    import pandas as pd
+
+    def run(batches):
+        frames = [b for b in batches if len(b)]
+        if not frames:
+            return
+        e = pd.concat(frames, ignore_index=True)
+        m = len(e)
+        ids, nodes = pd.factorize(pd.concat([e["src"], e["dst"]], ignore_index=True))
+        src, dst = ids[:m], ids[m:]
+        w = e["weight"].to_numpy(dtype="float64")
+        n = len(nodes)
+        dangling = np.bincount(src, minlength=n) == 0
+        teleport = (1.0 - damping) / n
+        pr = np.full(n, 1.0 / n)
+        for _ in range(max_iter):
+            contrib = np.bincount(dst, weights=pr[src] * w, minlength=n)
+            pr, prev = teleport + damping * (contrib + pr[dangling].sum() / n), pr
+            if tol is not None and np.abs(pr - prev).sum() < tol:
+                break
+        yield pd.DataFrame({"node": nodes, "pr": pr})
+
+    node_type = dict(edges.dtypes)["src"]
+    return (
+        edges.select("src", "dst", "weight")
+        .coalesce(1)
+        .mapInPandas(run, schema=f"node {node_type}, pr double")
+    )
 
 
 def label_propagation(

@@ -348,7 +348,6 @@ def test_connected_components_golden(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-@pytest.mark.slow
 def test_pagerank_convergence_mode(spark):
     """tol-mode must stop early on a quickly-mixing graph and land within
     tol-scale distance of a long fixed-iteration run."""
@@ -620,9 +619,12 @@ def test_pagerank_encoded_loop_matches_string_loop(spark, monkeypatch):
     """The r10 dictionary-encoding fast path (string node ids -> xxhash64
     int64 for the iteration loop, decoded at the end) must return exactly
     the rows the string loop returns — on a covered graph AND on a
-    dangling graph (the dangling set is itself encoded)."""
+    dangling graph (the dangling set is itself encoded). Both runs take
+    the driver loop: a gate of one edge per partition sends these toy
+    graphs past the one-task path."""
     from mapreduce_big_data_processing_spark.operators import graph as G
 
+    monkeypatch.setattr(G, "_PARTITION_EDGES", 1)
     sym = [
         ("a", "b", 0.5), ("b", "a", 1.0), ("a", "c", 0.5),
         ("c", "d", 1.0), ("d", "c", 0.5), ("d", "a", 0.5),
@@ -636,10 +638,50 @@ def test_pagerank_encoded_loop_matches_string_loop(spark, monkeypatch):
             r.node: round(r.pr, 12)
             for r in G.pagerank(edges, max_iter=7).collect()
         }
-        monkeypatch.setattr(G, "_ENCODE_MIN_EDGES", 1)
-        enc = {
-            r.node: round(r.pr, 12)
-            for r in G.pagerank(edges, max_iter=7).collect()
-        }
-        monkeypatch.undo()
+        with monkeypatch.context() as m:
+            m.setattr(G, "_ENCODE_MIN_EDGES", 1)
+            enc = {
+                r.node: round(r.pr, 12)
+                for r in G.pagerank(edges, max_iter=7).collect()
+            }
         assert enc == base
+
+
+@pytest.mark.parametrize("tol", [None, 1e-3])
+def test_pagerank_empty_edges(spark, tol):
+    """An empty edge set ranks no node, in fixed and convergence mode."""
+    edges = spark.createDataFrame([], "src string, dst string, weight double")
+    ranks = G.pagerank(edges, max_iter=3, tol=tol)
+    assert ranks.columns == ["node", "pr"]
+    assert ranks.collect() == []
+
+
+@pytest.mark.parametrize(
+    "pairs, tol",
+    [
+        # covered: every node has an out-edge, "s" has no in-edge
+        ([("s", "a", 1.0), ("a", "b", 0.5), ("a", "c", 0.5), ("b", "a", 1.0),
+          ("c", "b", 1.0)], None),
+        # dangling: "c" and "d" have no out-edge
+        ([("a", "b", 0.5), ("a", "c", 0.5), ("b", "d", 1.0)], None),
+        # every node has an in-edge and an out-edge
+        ([("a", "b", 0.5), ("b", "a", 1.0), ("a", "c", 0.5), ("c", "d", 1.0),
+          ("d", "c", 0.5), ("d", "a", 0.5)], None),
+        # convergence mode: Σ|Δpr| first drops under 1e-3 in round 13 of 30
+        ([("a", "b", 0.5), ("a", "c", 0.5), ("b", "a", 1.0), ("c", "b", 0.5),
+          ("c", "d", 0.5), ("d", "a", 1.0)], 1e-3),
+    ],
+    ids=["covered", "dangling", "all_have_in", "tol"],
+)
+def test_pagerank_one_task_matches_loop(spark, monkeypatch, pairs, tol):
+    """The one-task kernel that ranks one-partition graphs runs the driver
+    loop's recurrence: the same nodes, values within 1e-12."""
+    edges = spark.createDataFrame(pairs, "src string, dst string, weight double")
+    k = 12 if tol is None else 30
+    kernel = {r.node: r.pr for r in G.pagerank(edges, max_iter=k, tol=tol).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(G, "_PARTITION_EDGES", 1)  # every toy graph takes the loop
+        loop = {r.node: r.pr for r in G.pagerank(edges, max_iter=k, tol=tol).collect()}
+    assert set(kernel) == set(loop)
+    for node, pr in loop.items():
+        assert kernel[node] == pytest.approx(pr, rel=0, abs=1e-12)
