@@ -62,7 +62,7 @@ TABLES: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -78,7 +78,7 @@ TABLES: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
     "events": T.StructType(

@@ -1075,10 +1075,15 @@ def embedding_near_dup(
         # off the UN-fanned-out scan (a limit over the repartitioned src
         # would materialize the whole exchange first), so its cost is
         # O(cap) at every corpus size — guide §1.2: remove passes before
-        # tuning them.
+        # tuning them. The ids come back as one Arrow table: a top-level
+        # limit runs as one job at any partition count and compiles the
+        # same code on every call, where limit().count() compiles a new
+        # counter class per call and take() scales up over several jobs.
         probe_cap = int(max_bucket_rows) // n_probe
         small_corpus = (
-            probe_cap > 0 and src.limit(probe_cap + 1).count() <= probe_cap
+            probe_cap > 0
+            and src.select("__id").limit(probe_cap + 1).toArrow().num_rows
+            <= probe_cap
         )
         # compute is O(n·planes·dim) while the corpus bytes may be ONE
         # input split (the r3 single-split lesson) — fan out first. A

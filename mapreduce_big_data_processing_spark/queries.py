@@ -1926,7 +1926,10 @@ def events_profile(spark, sf_dir):
     exact = R.profile_table(ev, distinct_mode="exact").select(
         "col_name", F.col("n_distinct").alias("n_distinct_exact")
     )
-    return prod.join(exact, "col_name").select(
+    # exact on the LEFT: a self-join gives its right side fresh attribute
+    # ids, and Spark orders the exact side's distinct-aggregate Expand by
+    # their hashes, so on the right it generated new code on every call
+    return exact.join(prod, "col_name").select(
         "col_name",
         "n_rows",
         "n_nulls",
